@@ -1,9 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // Bench hygiene (round 13): capture the 1-minute load average AT
     // ENTRY — before Spark's own threads dominate it — and record it in
@@ -16,7 +17,7 @@ object Bench {
     val loadAtEntry =
       try scala.io.Source.fromFile("/proc/loadavg").getLines()
         .next().split(" ")(0)
-      catch { case _: Throwable => "-1" }
+      catch { case NonFatal(_) => "-1" }
     // Hot-machine guard (round 14; default flipped round 15; refusal
     // REMOVED round 16): the round-15 refuse-by-default protected the
     // committed sidecars but broke the measurement contract — any
@@ -41,7 +42,7 @@ object Bench {
           None
       })
       .getOrElse(1.7)
-    val entryLoad = try loadAtEntry.toDouble catch { case _: Throwable => -1.0 }
+    val entryLoad = try loadAtEntry.toDouble catch { case NonFatal(_) => -1.0 }
     val hotBox = entryLoad > hotLoadThreshold
     if (hotBox) {
       System.err.println(f"[bench] WARNING: at-entry 1-min loadavg $entryLoad%.2f " +
@@ -51,14 +52,7 @@ object Bench {
         "itself proceeds and the stdout JSON carries the loadavg")
     }
     val sidecarOk = !hotBox || sys.env.get("SPARK_GRAFT_BENCH_ALLOW_HOT").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.get()
     // Force the query's OWN physical plan: `df.count()` builds a new
     // Aggregate(count) logical plan and re-optimizes it, letting Catalyst
     // prune every computed projection, eliminate the output sort, and
@@ -67,20 +61,6 @@ object Bench {
     // `queryExecution.toRdd.count()` executes the already-planned query
     // unmodified (all expressions, joins, and sorts run; nothing but the
     // row count crosses to the driver).
-    // Storage hygiene between queries: localCheckpoint(true) (the
-    // iterative loops, the incremental fixtures, the rewrite scopes)
-    // registers MEMORY_AND_DISK blocks that are reclaimed only when the
-    // driver GC's the RDD reference (ContextCleaner weak refs) — across
-    // 260+ queries × 4 passes they pile into the shared local-mode
-    // storage pool until a LATE pass hits eviction/spill stalls at
-    // whatever query the pressure lands on (round-9 BENCH_FULL:
-    // q_quality_clf spread 9.7 s on a 3.4 s median, q_split_safe median
-    // poisoned to 6.4 s vs its OWN 10× median of 3.7 s). Every frame a
-    // query returns is dead once counted, so drop its blocks
-    // deterministically instead of waiting for a GC.
-    def drainStorage(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     def time(name: String): Double = {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -90,8 +70,8 @@ object Bench {
       // success (short time-to-failure shrinking the total)
       val elapsed =
         try { fn(spark, sfDir).queryExecution.toRdd.count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
-      drainStorage() // outside the timed span — costs the gap, not the query
+        catch { case NonFatal(_) => -1.0 }
+      LocalSession.drainStorage(spark) // outside the timed span — costs the gap, not the query
       elapsed
     }
     // Median of `runs` full passes per query: single-run timings flip-
@@ -118,8 +98,8 @@ object Bench {
     // the timed passes.
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, sfDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => () }
-      drainStorage()
+      catch { case NonFatal(_) => () }
+      LocalSession.drainStorage(spark)
     }
     // A GC between passes lets ContextCleaner reap the pass's broadcast
     // blocks (every broadcast join leaves one; they are weak-ref-cleaned
@@ -150,7 +130,7 @@ object Bench {
       val w = new java.io.PrintWriter("BENCH_FULL.json")
       try w.println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"nqueries":${full.size},"loadavg":$loadAtEntry,"queries":$fullJson,"sf":"$sfDir"}""")
       finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val budget = 1550 // chars available for the queries object on stdout
     val sb = new StringBuilder
     var shown = 0

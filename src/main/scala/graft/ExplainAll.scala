@@ -2,6 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev tool (optimization rounds): dump `.explain("formatted")` for every
   * declared query — or a comma-separated subset — to one file per query,
@@ -20,14 +21,7 @@ object ExplainAll {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.get()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -36,7 +30,7 @@ object ExplainAll {
         val plan =
           try fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+          catch { case NonFatal(e) => s"EXPLAIN FAILED: ${e.getMessage}" }
         Files.write(Paths.get(outDir, s"$name.txt"),
           plan.getBytes(StandardCharsets.UTF_8))
         println(s"[explain] $name")

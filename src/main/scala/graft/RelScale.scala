@@ -100,19 +100,12 @@ object RelScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val base = args.lift(1).getOrElse("/tmp/graft_rel_scale")
     val mults = args.lift(2).map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(1, 10))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = LocalSession.get()
     // a cluster raises shuffle parallelism with data; the 100×-tier
     // partition-scaling measurement (SCALING.md) sets this to 128 to
     // price exactly that, instead of arguing from the 32-fixed default
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     def dirFor(m: Int): String = if (m == 1) src else s"$base/x$m"
     mults.filter(_ > 1).foreach(m => gen(spark, src, dirFor(m), m))
@@ -122,22 +115,12 @@ object RelScale {
     val subset = args.find(_.startsWith("only="))
       .map(o => Subset.filter(o.stripPrefix("only=").split(",").toSet))
       .getOrElse(Subset)
-    // Storage hygiene between queries (the Bench.drainStorage lesson,
-    // round 11): the iterative graph queries localCheckpoint per round,
-    // and at the 100× tier those MEMORY_AND_DISK blocks accumulate
-    // across queries until a later query OOMs the shared local-mode
-    // pool (measured: the 128-partition 100× graph pass died at 100 g
-    // heap without this). Every frame is dead once counted — drop its
-    // blocks deterministically, outside the timed span.
-    def drainStorage(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     // warm JVM/codegen + page cache at every scale (see ScaleSlope);
     // toRdd.count() so the timed plan is the query's own, unpruned —
     // same rationale as Bench.time
     for (m <- mults; q <- subset) {
       SparkEntry.queries(q)(spark, dirFor(m)).queryExecution.toRdd.count()
-      drainStorage()
+      LocalSession.drainStorage(spark)
     }
     // SPARK_GRAFT_SCALE_RUNS > 1 → median-of-N full passes with spread
     // (round 12): single-run 100× numbers carry ±25% noise on the
@@ -153,7 +136,7 @@ object RelScale {
           val t0 = System.nanoTime()
           SparkEntry.queries(q)(spark, dirFor(m)).queryExecution.toRdd.count()
           val dt = (System.nanoTime() - t0) / 1e9
-          drainStorage()
+          LocalSession.drainStorage(spark)
           q -> dt
         }
       }.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap

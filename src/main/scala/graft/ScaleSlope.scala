@@ -215,14 +215,7 @@ object ScaleSlope {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_scale")
     val mults = args.lift(1).map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(1, 10))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.get()
 
     for (m <- mults) {
       val dir = s"$base/x$m"
@@ -281,15 +274,10 @@ object ScaleSlope {
     // toRdd.count() (not df.count()) so Catalyst can't prune computed
     // projections / eliminate the sort or keyed joins out of the timed
     // plan — same rationale as Bench.time
-    // storage hygiene between queries (the Bench.drainStorage lesson —
-    // localCheckpoint blocks are dead once counted; see RelScale)
-    def drainStorage(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     if (!recallOnly)
       for (m <- mults; q <- heavy if runsAt(q, m)) {
         SparkEntry.queries(q)(spark, s"$base/x$m").queryExecution.toRdd.count()
-        drainStorage()
+        LocalSession.drainStorage(spark)
       }
 
     val times0: Map[Int, Map[String, Double]] =
@@ -299,7 +287,7 @@ object ScaleSlope {
           val t0 = System.nanoTime()
           SparkEntry.queries(q)(spark, s"$base/x$m").queryExecution.toRdd.count()
           val dt = (System.nanoTime() - t0) / 1e9
-          drainStorage()
+          LocalSession.drainStorage(spark)
           q -> dt
         }.toMap
       }.toMap
@@ -343,14 +331,14 @@ object ScaleSlope {
     // still pages in this tier's parquet before the timed run)
     for (m <- mults; (_, f) <- variants) {
       f(m).queryExecution.toRdd.count()
-      drainStorage()
+      LocalSession.drainStorage(spark)
     }
     val varTimes: Map[Int, Map[String, Double]] = mults.map { m =>
       m -> variants.map { case (name, f) =>
         val t0 = System.nanoTime()
         f(m).queryExecution.toRdd.count()
         val dt = (System.nanoTime() - t0) / 1e9
-        drainStorage()
+        LocalSession.drainStorage(spark)
         name -> dt
       }.toMap
     }.toMap

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Store-growth harness for the streaming near-dedup band store
@@ -44,14 +44,7 @@ object StoreScale {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_storescale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.get()
 
     val batchDocs = 5000L
     val nBatches = 10
@@ -66,10 +59,6 @@ object StoreScale {
       docs.filter(col("doc_id") >= i * batchDocs && col("doc_id") < (i + 1) * batchDocs)
     val probeBatch = docs.filter(
       col("doc_id") >= nBatches * batchDocs && col("doc_id") < nBatches * batchDocs + 8)
-
-    def drainStorage(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
 
     // fresh state every run — the measurement is the growth curve, so
     // stale batches from a previous invocation would flatten nothing
@@ -89,7 +78,7 @@ object StoreScale {
     streaming.StreamingDedup.commitBatch(slice(0).limit(8), 1L,
       s"$base/warm/store", s"$base/warm/pairs", 0.5)
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/warm"), true)
-    drainStorage()
+    LocalSession.drainStorage(spark)
 
     def ingest(prune: Boolean, name: String): Seq[Double] = {
       val store = s"$base/$name/store"
@@ -97,7 +86,7 @@ object StoreScale {
       (0 until nBatches).map { i =>
         val dt = time(streaming.StreamingDedup.commitBatch(
           slice(i), i.toLong, store, pairs, 0.5, prune = prune))
-        drainStorage()
+        LocalSession.drainStorage(spark)
         dt
       }
     }
@@ -109,7 +98,7 @@ object StoreScale {
       (0 until 5).map { _ =>
         val dt = time(streaming.StreamingDedup.commitBatch(
           probeBatch, id, store, pairs, 0.5, prune = prune))
-        drainStorage()
+        LocalSession.drainStorage(spark)
         dt
       }.sorted.apply(2)
 
@@ -120,7 +109,7 @@ object StoreScale {
       s"$base/pruned/store1", s"$base/pruned/pairs1", 0.5)
     streaming.StreamingDedup.commitBatch(slice(0), 0L,
       s"$base/full/store1", s"$base/full/pairs1", 0.5, prune = false)
-    drainStorage()
+    LocalSession.drainStorage(spark)
     // uncompacted probes (append-tier row pruning only vs full read)
     val probeApp1 = probeOnce(s"$base/pruned/store1", s"$base/pruned/pairs1", true, 1000L)
     val probeApp10 = probeOnce(s"$base/pruned/store", s"$base/pruned/pairs", true, 1000L)
@@ -129,7 +118,7 @@ object StoreScale {
     // compact both pruned stores, then the headline bucketed probes
     streaming.StreamingDedup.compactStore(spark, s"$base/pruned/store1", 1000L)
     streaming.StreamingDedup.compactStore(spark, s"$base/pruned/store", 1000L)
-    drainStorage()
+    LocalSession.drainStorage(spark)
     val probeCmp1 = probeOnce(s"$base/pruned/store1", s"$base/pruned/pairs1", true, 1001L)
     val probeCmp10 = probeOnce(s"$base/pruned/store", s"$base/pruned/pairs", true, 1001L)
 
@@ -170,7 +159,7 @@ object StoreScale {
     // sub-second absolutes → single runs flip the slope by ±0.3 on
     // box noise alone; median-of-5 per point (the Bench discipline)
     def med5(f: => Double): Double =
-      (0 until 5).map { _ => val dt = f; drainStorage(); dt }.sorted.apply(2)
+      (0 until 5).map { _ => val dt = f; LocalSession.drainStorage(spark); dt }.sorted.apply(2)
     def hubProbe(st: streaming.TieredStore): Double =
       med5(time(st.readPruned(spark, 1000L, probeDigests).get.count()))
     def hubFull(st: streaming.TieredStore): Double =
@@ -180,7 +169,7 @@ object StoreScale {
     time(hubs1.readPruned(spark, 1000L, probeDigests).get.count())
     time(hubs1.readAll(spark, 1000L).get
       .join(broadcast(probeDigests), Seq("digest"), "left_semi").count())
-    drainStorage()
+    LocalSession.drainStorage(spark)
     val hubP1 = hubProbe(hubs1); val hubP10 = hubProbe(hubs10)
     val hubP100 = hubProbe(hubs100); val hubP1000 = hubProbe(hubs1000)
     val hubF1 = hubFull(hubs1); val hubF10 = hubFull(hubs10)
@@ -200,7 +189,7 @@ object StoreScale {
         val b = docs.filter(col("doc_id") >= i * lrDocs && col("doc_id") < (i + 1) * lrDocs)
         val dt = time(streaming.StreamingDedup.commitBatch(
           b, i.toLong, store, pairs, 0.5, compactEvery = every))
-        drainStorage()
+        LocalSession.drainStorage(spark)
         dt
       }
     }
@@ -218,7 +207,7 @@ object StoreScale {
             b, i.toLong, store, s"$base/lr_geo/pairs", 0.5)
           st.maybeCompactBySize(spark, ratio = 1.0, minBytes = 1L)
         }
-        drainStorage()
+        LocalSession.drainStorage(spark)
         dt
       }
     }

@@ -280,13 +280,7 @@ object Udx {
           round(sum(col("o_totalprice")), 4).as("total"))
         .orderBy(col("priority"))
         .localCheckpoint(true)
-    } finally {
-      import scala.util.Try
-      val walk = java.nio.file.Files.walk(base)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-      finally walk.close()
-    }
+    } finally graft.streaming.StreamFixture.deleteTree(base)
   }
 
   /** The JSONL write + schema'd read-back itself, nested columns intact.
@@ -323,13 +317,8 @@ object Udx {
       val cutoff = System.currentTimeMillis() - RoundtripAbandonedMs
       Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
         if (f.getName.startsWith(prefix + "_") && !f.getName.contains(app) &&
-            f.lastModified() < cutoff) {
-          import scala.util.Try
-          val walk = java.nio.file.Files.walk(f.toPath)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-          finally walk.close()
-        }
+            f.lastModified() < cutoff)
+          graft.streaming.StreamFixture.deleteTree(f.toPath)
       }
     } catch { case _: Exception => () }
     new java.io.File(tmp, s"${prefix}_${app}_${dirTag(d)}").toString

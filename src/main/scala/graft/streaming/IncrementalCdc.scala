@@ -75,30 +75,8 @@ object IncrementalCdc {
     * `nFiles` parquet files, drain them as real micro-batches through
     * foreachBatch, snapshot, clean up the temp state.
     */
-  def fixtureRun(spark: SparkSession, sfDir: String, nFiles: Int = 3): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc_cdc")
-    try {
-      graft.Tables.events(spark, sfDir)
-        .select(RowSchema.fieldNames.map(col).toSeq: _*)
-        .repartition(nFiles).write.parquet(s"$tmp/in")
-      val schema = spark.read.parquet(s"$tmp/in").schema
-      val q = StreamingDedup.docsStream(spark, s"$tmp/in", schema)
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ck")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          commitBatch(batch, batchId, s"$tmp/state")
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally q.stop()
-      snapshot(spark, s"$tmp/state").localCheckpoint(true)
-    } finally {
-      import scala.util.Try
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-      finally walk.close()
-    }
-  }
+  def fixtureRun(spark: SparkSession, sfDir: String, nFiles: Int = 3): DataFrame =
+    StreamFixture.run(graft.Tables.events(spark, sfDir)
+      .select(RowSchema.fieldNames.map(col).toSeq: _*), nFiles)(
+      commitBatch, snapshot(spark, _))
 }

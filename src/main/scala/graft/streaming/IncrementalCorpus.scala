@@ -137,25 +137,6 @@ object IncrementalCorpus {
     * but never enlarge (ScaleSlope's fixedref tier uses this to price
     * the incremental machinery, not the growing-bench fixture).
     */
-  /** Phase-attribution hook (round 16, VERDICT item 3): with
-    * SPARK_GRAFT_INC_PROFILE=1, each [[ingestBatch]] phase prints its
-    * wall seconds to stderr so the per-batch budget can be NAMED
-    * instead of guessed. Off by default — a no-op closure, zero cost
-    * in the bench path.
-    */
-  private val profileOn: Boolean =
-    sys.env.get("SPARK_GRAFT_INC_PROFILE").contains("1")
-
-  private def profile[A](phase: String, batchId: Long)(body: => A): A =
-    if (!profileOn) body
-    else {
-      val t0 = System.nanoTime()
-      val out = body
-      System.err.println(
-        f"[inc-profile] batch=$batchId $phase%-14s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      out
-    }
-
   def ingestBatch(batch: DataFrame, batchId: Long, base: String,
       threshold: Double = 0.5, minOverlap: Double = 0.3,
       benchMaxId: Long = Long.MaxValue,
@@ -217,19 +198,18 @@ object IncrementalCorpus {
     }
     // one materialization of the arriving docs: feeds the bench split,
     // the quality gate, and (via commitBatch) signature generation
-    val b = profile("batch_ckpt", batchId)(batch.localCheckpoint(true))
+    val b = batch.localCheckpoint(true)
     val benchDelta = b.filter(col("doc_id") % 10 === 0 &&
         col("doc_id") < benchMaxId)
       .select(col("doc_id"), col("text"))
-    val q = profile("quality_ckpt", batchId)(CorpusPipeline.qualityFilter(b)
+    val q = CorpusPipeline.qualityFilter(b)
       .withColumn("digest", sha2(lower(trim(col("text"))), 256))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
 
     // near-dup candidate pairs + band store, batch-keyed (train-once
     // signatures; the band join prunes to buckets the batch touches)
-    profile("near_dedup", batchId)(
-      StreamingDedup.commitBatch(q.drop("digest"), batchId,
-        s"$base/store", s"$base/pairs", threshold, compactEvery = compactEvery))
+    StreamingDedup.commitBatch(q.drop("digest"), batchId,
+      s"$base/store", s"$base/pairs", threshold, compactEvery = compactEvery)
 
     // exact-dup connectivity: one star edge per new doc sharing a digest
     // with an earlier doc or with a batch-mate — linear, ids only.
@@ -253,9 +233,8 @@ object IncrementalCorpus {
     // materialized ONCE: the batch's (digest → min doc_id) rows feed
     // the pruned read's probe, the hub lookup join, and the delta —
     // bounded by the batch's own distinct-digest count
-    val bmin = profile("hub_bmin", batchId)(
-      q.groupBy("digest").agg(min(col("doc_id")).as("bmin"))
-        .localCheckpoint(true))
+    val bmin = q.groupBy("digest").agg(min(col("doc_id")).as("bmin"))
+      .localCheckpoint(true)
     // hubs delta = digests this batch INTRODUCES, hubbed at their
     // batch minimum — replay-idempotent like every other per-batch
     // write. batchHubs (the restricted earlier-hub rows the pruned
@@ -263,7 +242,7 @@ object IncrementalCorpus {
     // the delta anti-join read it; the result is bounded by the
     // batch's own digest count. The first batch (no hubs yet) skips
     // the whole lookup machinery: every digest is new.
-    val (withHub, hubsDelta) = profile("hub_lookup", batchId)(
+    val (withHub, hubsDelta) =
       hubStore.readPruned(spark, batchId, bmin.select(col("digest"))) match {
         case None =>
           (q.select(col("doc_id"), col("digest")).join(bmin, "digest")
@@ -278,17 +257,14 @@ object IncrementalCorpus {
             bmin.select(col("digest"), col("bmin").as("hub"))
               .join(broadcast(batchHubs.select(col("digest"))),
                 Seq("digest"), "left_anti"))
-      })
+      }
     val dedges = withHub.filter(col("doc_id") =!= col("hub"))
       .select(col("hub").as("src"), col("doc_id").as("dst"))
-    profile("hub_dedges", batchId)(
-      StreamingDedup.writeBatchPartition(dedges, batchId, s"$base/dedges"))
+    StreamingDedup.writeBatchPartition(dedges, batchId, s"$base/dedges")
     // digest-sorted append + the same automatic compaction cadence as
     // the band store — post-commit, replay- and crash-safe
-    profile("hub_append", batchId) {
-      hubStore.append(hubsDelta, batchId)
-      if (compactEvery > 0) hubStore.maybeCompact(spark, compactEvery)
-    }
+    hubStore.append(hubsDelta, batchId)
+    if (compactEvery > 0) hubStore.maybeCompact(spark, compactEvery)
 
     // contamination: new docs vs all benchmark docs so far, and already-
     // ingested docs vs the batch's new benchmark docs — each a bounded
@@ -313,20 +289,17 @@ object IncrementalCorpus {
     // (raw/ is read ONLY on this rare new-bench-docs path since round 14
     // — the per-batch exact-dup lookup reads hubs/ instead.)
     val rawOld = readBefore(spark, s"$base/raw", batchId)
-    val oldVsNew = profile("rescreen_probe", batchId)(rawOld match {
+    val oldVsNew = rawOld match {
       case Some(old) if !benchDelta.isEmpty =>
         Corpus.decontamAgainst(old.drop("digest"), benchDelta, minOverlap)
           .select(col("doc_id"))
       case _ => newVsAll.limit(0)
-    })
-    val flags = newVsAll.unionByName(oldVsNew).distinct()
-    profile("decontam", batchId)(
-      StreamingDedup.writeBatchPartition(flags, batchId, s"$base/flags"))
-    profile("state_writes", batchId) {
-      StreamingDedup.writeBatchPartition(benchDelta, batchId, s"$base/bench")
-      StreamingDedup.writeBatchPartition(benchShDelta, batchId, s"$base/benchsh")
-      StreamingDedup.writeBatchPartition(q, batchId, s"$base/raw")
     }
+    val flags = newVsAll.unionByName(oldVsNew).distinct()
+    StreamingDedup.writeBatchPartition(flags, batchId, s"$base/flags")
+    StreamingDedup.writeBatchPartition(benchDelta, batchId, s"$base/bench")
+    StreamingDedup.writeBatchPartition(benchShDelta, batchId, s"$base/benchsh")
+    StreamingDedup.writeBatchPartition(q, batchId, s"$base/raw")
   }
 
   /** The current train-ready corpus: connected components over the
@@ -391,31 +364,14 @@ object IncrementalCorpus {
   /** Self-contained fixture run (the q_corpus_inc query surface): land
     * the documents table as a multi-file dir, stream it through
     * [[ingestBatch]] batch by batch via foreachBatch, return the final
-    * [[snapshot]]. The temp state is deleted after localCheckpointing
-    * the result, as in [[StreamingDedup.nearDedupFixtureRun]].
+    * [[snapshot]]. Runs through [[StreamFixture]], so the temp state is
+    * deleted on every exit path.
     */
   def fixtureRun(spark: SparkSession, sfDir: String, nFiles: Int = 2,
-      benchMaxId: Long = Long.MaxValue): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc_corpus")
-    graft.Tables.documents(spark, sfDir)
-      .repartition(nFiles).write.parquet(s"$tmp/in")
-    val schema = spark.read.parquet(s"$tmp/in").schema
-    val q = StreamingDedup.docsStream(spark, s"$tmp/in", schema)
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ck")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, s"$tmp/state", benchMaxId = benchMaxId)
-      }
-      .start()
-    profile("stream_total", -1L) { q.processAllAvailable() }
-    q.stop()
-    val out = profile("snapshot", -1L)(snapshot(spark, s"$tmp/state")
-      .select(col("doc_id"), col("lang"), col("split"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint(true))
-    import scala.util.Try
-    java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-    out
-  }
+      benchMaxId: Long = Long.MaxValue): DataFrame =
+    StreamFixture.run(graft.Tables.documents(spark, sfDir), nFiles)(
+      (batch, batchId, state) => ingestBatch(batch, batchId, state, benchMaxId = benchMaxId),
+      state => snapshot(spark, state)
+        .select(col("doc_id"), col("lang"), col("split"))
+        .orderBy(col("doc_id")))
 }

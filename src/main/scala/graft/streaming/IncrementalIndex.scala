@@ -82,29 +82,7 @@ object IncrementalIndex {
     * foreachBatch, snapshot, clean up the temp state. Deterministic:
     * the snapshot is a pure function of the ingested set.
     */
-  def fixtureRun(spark: SparkSession, sfDir: String, nFiles: Int = 3): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc_index")
-    try {
-      graft.Tables.documents(spark, sfDir)
-        .repartition(nFiles).write.parquet(s"$tmp/in")
-      val schema = spark.read.parquet(s"$tmp/in").schema
-      val q = StreamingDedup.docsStream(spark, s"$tmp/in", schema)
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ck")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          commitBatch(batch, batchId, s"$tmp/state")
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally q.stop()
-      snapshot(spark, s"$tmp/state").localCheckpoint(true)
-    } finally {
-      import scala.util.Try
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-      finally walk.close()
-    }
-  }
+  def fixtureRun(spark: SparkSession, sfDir: String, nFiles: Int = 3): DataFrame =
+    StreamFixture.run(graft.Tables.documents(spark, sfDir), nFiles)(
+      commitBatch, snapshot(spark, _))
 }

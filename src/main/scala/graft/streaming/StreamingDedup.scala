@@ -269,19 +269,6 @@ object StreamingDedup {
     * safe under replay and crash (see there); 0 leaves compaction to
     * the operator ([[compactStore]]).
     */
-  private val profileOn: Boolean =
-    sys.env.get("SPARK_GRAFT_INC_PROFILE").contains("1")
-
-  private def profile[A](phase: String, batchId: Long)(body: => A): A =
-    if (!profileOn) body
-    else {
-      val t0 = System.nanoTime()
-      val out = body
-      System.err.println(
-        f"[sd-profile] batch=$batchId $phase%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      out
-    }
-
   def commitBatch(batch: DataFrame, batchId: Long, storeDir: String,
       pairsDir: String, threshold: Double, prune: Boolean = true,
       compactEvery: Int = 0): Unit = {
@@ -290,29 +277,25 @@ object StreamingDedup {
     // band rows feed the touched-hash collect, the pair join, AND the
     // store write — cut the streaming-source lineage and materialize
     // ONCE (signatures are the batch's expensive map-only work)
-    val bands = profile("sign", batchId)(
-      Similarity.bandedSignaturesOf(batch).localCheckpoint(true))
-    val store = profile("store_read", batchId)(
+    val bands = Similarity.bandedSignaturesOf(batch).localCheckpoint(true)
+    val store =
       if (prune) bandStore.readPruned(spark, batchId, bands)
-      else bandStore.readAll(spark, batchId))
+      else bandStore.readAll(spark, batchId)
     val (pairs, cappedBoundary) = pairsFromBands(bands, store, threshold)
-    profile("pairs", batchId) {
-      writeBatchPartition(pairs, batchId, pairsDir)
-      cappedBoundary.unpersist() // dead once the pairs landed
-    }
+    writeBatchPartition(pairs, batchId, pairsDir)
+    cappedBoundary.unpersist() // dead once the pairs landed
     // sorted-by-band_hash append (tight row-group stats for the pruned
     // read's pushed predicates); file count stays at task count — the
     // bucketed layout is compaction's job
-    profile("append", batchId) {
-      bandStore.append(bands, batchId)
-      if (compactEvery > 0) bandStore.maybeCompact(spark, compactEvery)
-    }
+    bandStore.append(bands, batchId)
+    if (compactEvery > 0) bandStore.maybeCompact(spark, compactEvery)
   }
 
   /** Run the stream: docs under `docsDir` → near-dup pairs landed under
     * `pairsDir`, band rows accumulated under `storeDir`, both keyed by
     * micro-batch id. Blocks until all currently-available input is
-    * processed. The band store compacts automatically every
+    * processed and returns the still-running query (the caller stops
+    * it; a failed drain has already stopped it). The band store compacts automatically every
     * `compactEvery` batches ([[DefaultCompactEvery]]) so a long-running
     * ingest converges to the bucketed flat-probe regime without
     * operator intervention; 0 disables.
@@ -320,46 +303,26 @@ object StreamingDedup {
   def nearDedupStream(spark: SparkSession, docsDir: String, schema: StructType,
       storeDir: String, pairsDir: String, checkpoint: String,
       threshold: Double = 0.5, maxFilesPerTrigger: Int = 1,
-      compactEvery: Int = DefaultCompactEvery): StreamingQuery = {
-    val q = docsStream(spark, docsDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(batch, batchId, storeDir, pairsDir, threshold,
-          compactEvery = compactEvery)
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      compactEvery: Int = DefaultCompactEvery): StreamingQuery =
+    StreamFixture.drain(docsStream(spark, docsDir, schema, maxFilesPerTrigger),
+      checkpoint) { (batch, batchId) =>
+      commitBatch(batch, batchId, storeDir, pairsDir, threshold,
+        compactEvery = compactEvery)
+    }
 
   /** Self-contained fixture run (the q_stream_dedup_near query surface):
     * land the documents table as a multi-file parquet dir, stream it
-    * batch-by-batch through [[nearDedupStream]], return the accumulated
+    * batch-by-batch through [[commitBatch]], return the accumulated
     * pairs. Deterministic: the emitted pair SET is independent of the
-    * batch split (see pair-emission invariant above). The working
-    * directory is deleted before returning — the result is
-    * localCheckpointed first so it no longer reads from it.
+    * batch split (see pair-emission invariant above). Runs through
+    * [[StreamFixture]], so the working directory is deleted on every
+    * exit path.
     */
   def nearDedupFixtureRun(spark: SparkSession, sfDir: String,
       threshold: Double = 0.5, nFiles: Int = 4,
-      compactEvery: Int = DefaultCompactEvery): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
-    graft.Tables.documents(spark, sfDir)
-      .repartition(nFiles).write.parquet(s"$tmp/in")
-    val schema = spark.read.parquet(s"$tmp/in").schema
-    val q = nearDedupStream(spark, s"$tmp/in", schema,
-      s"$tmp/store", s"$tmp/pairs", s"$tmp/ck", threshold,
-      compactEvery = compactEvery)
-    q.stop()
-    val out = readPairs(spark, s"$tmp/pairs")
-      .orderBy(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
-    // bench/verify call this repeatedly — don't leak a copy of the
-    // corpus + store + checkpoint per invocation
-    import scala.util.Try
-    java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-    out
-  }
+      compactEvery: Int = DefaultCompactEvery): DataFrame =
+    StreamFixture.run(graft.Tables.documents(spark, sfDir), nFiles)(
+      (batch, batchId, state) => commitBatch(batch, batchId, s"$state/store",
+        s"$state/pairs", threshold, compactEvery = compactEvery),
+      state => readPairs(spark, s"$state/pairs").orderBy(col("doc_a"), col("doc_b")))
 }
