@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,14 +10,13 @@ import org.apache.spark.sql.functions._
   * is two groupBy-join passes over the EDGE list only, converging in
   * O(log² n) rounds with per-round work proportional to |E|.
   *
-  * Complements [[Components.connectedComponents]] (min-label
-  * propagation + pointer jumping, which carries a LABEL table of all
-  * nodes through every round): on a 100-TB dedup graph whose edge list
-  * is much smaller than its node universe — the common case, since most
-  * documents have no near-duplicate — star contraction touches only
-  * nodes that appear in edges. StarComponentsSpec asserts both
-  * algorithms label identically on chains, cliques, forests, and
-  * random graphs.
+  * The one components engine in production. Min-label propagation +
+  * pointer jumping (the `Components` oracle in the test tree) carries a
+  * LABEL table of all nodes through every round; on a 100-TB dedup
+  * graph whose edge list is much smaller than its node universe — the
+  * common case, since most documents have no near-duplicate — star
+  * contraction touches only nodes that appear in edges. StarComponentsSpec asserts both algorithms label identically
+  * on chains, cliques, forests, and random graphs.
   *
   * Invariant maintained throughout: every edge (u, v) satisfies u > v
   * ("child points to smaller parent"). At the fixpoint the edge list is
@@ -91,17 +91,13 @@ object StarComponents {
     *                 ([[DriverEdgeLimit]]); 0 forces the distributed
     *                 loop (specs pin parity between the two paths)
     * @return (id, comp) — every node labeled with its component's
-    *         minimum node id (same contract as
-    *         [[Components.connectedComponents]])
+    *         minimum node id
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 30,
       validate: Boolean = true,
       driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
-    val nodesObs = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-      .observe("n_nodes", count(lit(1)))
-    val nodes = nodesObs.localCheckpoint(true)
-    val nNodes = nodesObs.queryExecution.observedMetrics("n_nodes").getLong(0)
+    val (nodes, nNodes) = Materialize.counted(edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct())
     // convergence via an order-independent content fingerprint:
     // (count, sum(xxhash64(u,v))) — the hash sum identifies the edge SET,
     // not just its moments, so two distinct consecutive edge sets can't
@@ -115,10 +111,8 @@ object StarComponents {
     // same (count, sum) pair, now collected DURING the job that was
     // already scanning every row to checkpoint it.
     def ckWithFingerprint(df: DataFrame): (DataFrame, (Long, BigDecimal)) = {
-      val obs = df.observe("fp", count(lit(1)),
+      val (ck, r) = Materialize.observed(df, count(lit(1)),
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")))
-      val ck = obs.localCheckpoint(true)
-      val r = obs.queryExecution.observedMetrics("fp")
       (ck, (r.getLong(0),
         Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(BigDecimal(0))))
     }
@@ -201,4 +195,16 @@ object StarComponents {
     nodes.join(e.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
+
+  /** Dedup clusters from a near-dup pair list: one row per component
+    * with the representative (minimum doc id — also the component
+    * label) and the cluster size. Singleton documents never enter the
+    * pair list and are implicitly kept.
+    */
+  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    connectedComponents(pairs.select(col(aCol).as("src"), col(bCol).as("dst")),
+      validate = false)
+      .groupBy(col("comp").as("keep_id"))
+      .agg(count(lit(1)).as("cluster_size"))
+      .orderBy(col("keep_id"))
 }

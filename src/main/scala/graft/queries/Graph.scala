@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables => T}
+import graft.{Materialize, QueryDef, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,24 +48,13 @@ object Graph {
   private def maybeBcast(df: DataFrame, nodeCount: Long, limit: Long): DataFrame =
     if (nodeCount <= limit) broadcast(df) else df
 
-  /** Eager localCheckpoint whose row count rides the materialization
-    * job as an `observe` metric (round 15) — every iterative operator
-    * here pays a bounding count right after a checkpoint, and the
-    * separate count action was pure job latency at fixture scale.
-    */
-  private def ckCounted(df: DataFrame): (DataFrame, Long) = {
-    val obs = df.observe("n", count(lit(1)))
-    val ck = obs.localCheckpoint(true)
-    (ck, obs.queryExecution.observedMetrics("n").getLong(0))
-  }
-
   /** Spark-side deterministic integer PageRank; factored out so specs
     * can run it on crafted graphs (GraphSpec parity vs a naive
     * in-test implementation).
     */
   def pagerankOf(nodes: DataFrame, edges: DataFrame, iterations: Int,
                  bcastLimit: Long = BroadcastNodeLimit): DataFrame = {
-    val (nd, n) = ckCounted(nodes) // bounded: dimension-table count
+    val (nd, n) = Materialize.counted(nodes) // bounded: dimension-table count
     // materialize the loop-invariant state ONCE: edges pre-joined with
     // their source's out-weight (the denominator never changes), and
     // the node list. Without this every iteration re-derives the edge
@@ -80,13 +69,12 @@ object Graph {
     // remove shuffles outright). wtot is aggregated BEFORE the
     // restriction, so out-of-node-set destinations still dilute their
     // source's rank exactly as the oracle's deg CTE prescribes.
-    val ew = edges.join(
+    val ew = Materialize.frame(edges.join(
         maybeBcast(edges.groupBy(col("src")).agg(sum(col("w")).as("wtot")), n, bcastLimit),
         "src")
       .select(col("src"), col("dst"), col("w"), col("wtot"))
       .join(maybeBcast(nd.select(col("node").as("dst")), n, bcastLimit),
-        Seq("dst"), "left_semi")
-      .localCheckpoint(true)
+        Seq("dst"), "left_semi"))
     val base = Scale / n
     val base15 = (15L * base) / 100L
     var pr = nd.withColumn("pr", lit(base))
@@ -99,14 +87,13 @@ object Graph {
       // rank is node-count rows (the contracted graph) — broadcast it
       // into the edge scan (conditional on BroadcastNodeLimit) so the
       // only shuffle per iteration is the node-keyed contribution agg
-      pr = maybeBcast(pr, n, bcastLimit).join(ew, pr("node") === ew("src"))
+      // truncate lineage: 10 chained join+agg rounds would otherwise
+      // compound into one mega-plan (node-count rows only — cheap)
+      pr = Materialize.frame(maybeBcast(pr, n, bcastLimit).join(ew, pr("node") === ew("src"))
         .selectExpr("dst AS node", "(pr * w) div wtot AS c")
         .unionByName(zeros)
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        .selectExpr("node", s"${base15}L + ((85 * s) div 100) AS pr")
-        // truncate lineage: 10 chained join+agg rounds would otherwise
-        // compound into one mega-plan (node-count rows only — cheap)
-        .localCheckpoint(true)
+        .selectExpr("node", s"${base15}L + ((85 * s) div 100) AS pr"))
       it += 1
     }
     pr
@@ -182,17 +169,16 @@ object Graph {
     */
   def lpaOf(edges: DataFrame, iterations: Int,
             bcastLimit: Long = BroadcastNodeLimit): DataFrame = {
-    val ew = edges.localCheckpoint(true)
-    var (lab, n) = ckCounted(ew.select(col("src").as("node")).distinct()
+    val ew = Materialize.frame(edges)
+    var (lab, n) = Materialize.counted(ew.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))) // node-dimension count rides the ck
     var it = 0
     while (it < iterations) {
       val votes = maybeBcast(lab, n, bcastLimit).join(ew, lab("node") === ew("src"))
         .groupBy(col("dst"), col("label")).agg(sum(col("w")).as("v"))
-      lab = graft.plans.GroupedTopKOp
+      lab = Materialize.frame(graft.plans.GroupedTopKOp
         .topK(votes, 1, Seq("dst"), Seq(("v", true), ("label", false)))
-        .select(col("dst").as("node"), col("label"))
-        .localCheckpoint(true)
+        .select(col("dst").as("node"), col("label")))
       it += 1
     }
     lab.orderBy(col("node"))
@@ -243,19 +229,19 @@ object Graph {
     // adj broadcast — ~2e8 oriented edges of arrays; the fallback below
     // turns that run into two m-row shuffle joins, exactly as this
     // comment always promised.)
-    val (und, m) = ckCounted(edges.filter(col("src") < col("dst"))
+    val (und, m) = Materialize.counted(edges.filter(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b")))
     // deg materialized once (round 16): THREE consumers (both
     // orientation joins' broadcast builds + the node count) each re-ran
     // the two-sided union + aggregation over the edge checkpoint; now
     // one pass, node-dimension rows, and the node count rides the
     // checkpoint job as its observe metric (guide §7.2/§2.4)
-    val (deg, nNodesCnt) = ckCounted(und.select(col("a").as("node"))
+    val (deg, nNodesCnt) = Materialize.counted(und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     // deg is node-count rows — broadcast both orientation joins (below
     // the ceiling) so the m-row edge list never shuffles for them
-    val oriented = und
+    val oriented = Materialize.frame(und
       .join(maybeBcast(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), m, BroadcastNodeLimit), "a")
       .join(maybeBcast(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), m, BroadcastNodeLimit), "b")
       .select(
@@ -266,8 +252,7 @@ object Graph {
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
           col("da")).otherwise(col("db")).as("du"),
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint(true)
+          col("db")).otherwise(col("da")).as("dv")))
     // adjacency-intersection count: tri = Σ over oriented edges (u,v)
     // of |N⁺(u) ∩ N⁺(v)| — each triangle a≺b≺c counted exactly once at
     // its (a,b) edge. This never materializes wedge rows (the first-cut
@@ -321,18 +306,17 @@ object Graph {
     // independently at 100 TB.
     QueryDef("q_bfs",
       (s, d) => {
-        val edges = coPurchaseEdges(T.lineitem(s, d))
-          .select(col("src"), col("dst")).localCheckpoint(true)
+        val edges = Materialize.frame(coPurchaseEdges(T.lineitem(s, d))
+          .select(col("src"), col("dst")))
         import s.implicits._
-        var best = Seq((1L, 0)).toDF("node", "hop").localCheckpoint(true)
+        var best = Materialize.frame(Seq((1L, 0)).toDF("node", "hop"))
         var frontier = best.select(col("node"))
         for (h <- 1 to 3) {
-          val next = frontier.join(edges, col("node") === col("src"))
+          val next = Materialize.frame(frontier.join(edges, col("node") === col("src"))
             .select(col("dst").as("node")).distinct()
             .join(best.select(col("node").as("seen")),
               col("node") === col("seen"), "left_anti")
-            .withColumn("hop", lit(h))
-            .localCheckpoint(true)
+            .withColumn("hop", lit(h)))
           // best stays a lazy union of the ≤4 checkpointed hop frames:
           // re-checkpointing the union each hop re-materialized rows
           // that already live in block storage (round 15 — one fewer
@@ -382,10 +366,9 @@ object Graph {
         // three consumers (basket count, item supports, pair explosion)
         // — uncheckpointed, each re-ran the fact-table scan + distinct
         // exchange (round 15: 4 lineitem scans in the before plan)
-        val items = T.lineitem(s, d)
+        val items = Materialize.frame(T.lineitem(s, d)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("item"))
-          .distinct()
-          .localCheckpoint(true)
+          .distinct())
         val nBaskets = items.select(col("ok")).distinct()
           .agg(count(lit(1)).as("n_baskets"))
         val itemSupp = items.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
@@ -468,17 +451,16 @@ object Graph {
         // branches (deg, both nb sides, the anti join) would otherwise
         // each re-run the fact-table self-join + w>=2 aggregation
         // sparsified edge count bounds |deg| <= 2m; rides the ck job
-        val (e, m) = ckCounted(coPurchaseEdges(T.lineitem(s, d))
+        val (e, m) = Materialize.counted(coPurchaseEdges(T.lineitem(s, d))
           .filter(col("w") >= 2)
           .filter(col("src") < col("dst"))
           .select(col("src").as("a"), col("dst").as("b")))
         // materialized once (round 16): both degree-attach broadcast
         // builds consumed deg, each re-running the two-sided union +
         // aggregation over the edge checkpoint (node-dimension rows)
-        val deg = e.select(col("a").as("node"))
+        val deg = Materialize.frame(e.select(col("a").as("node"))
           .union(e.select(col("b").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-          .localCheckpoint(true)
+          .groupBy(col("node")).agg(count(lit(1)).as("deg")))
         val nb = e.select(col("a").as("z"), col("b").as("x"))
           .union(e.select(col("b").as("z"), col("a").as("x")))
         val cand = nb.as("l")
@@ -550,12 +532,12 @@ object Graph {
     // rows and broadcasts under the standard ceiling (edge count
     // bounds it), with the hint dropping past it like every other
     // iterative operator here.
-    var (e, m) = ckCounted(edges.select(col("src"), col("dst")))
+    var (e, m) = Materialize.counted(edges.select(col("src"), col("dst")))
     var done = m == 0
     while (!done) {
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
-      val (e2, m2) = ckCounted(e
+      val (e2, m2) = Materialize.counted(e
         .join(maybeBcast(keep.select(col("node").as("src")), m, BroadcastNodeLimit),
           Seq("src"), "left_semi")
         .join(maybeBcast(keep.select(col("node").as("dst")), m, BroadcastNodeLimit),

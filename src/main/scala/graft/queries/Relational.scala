@@ -283,7 +283,7 @@ object Relational {
     // into a hash join mechanically. Same answer, same oracle as
     // q_join_range. The result must materialize inside the rule's
     // register→deregister window (lazy eval would escape it), so we
-    // force it with an EAGER localCheckpoint: executors materialize the
+    // force it with an EAGER Materialize.frame: executors materialize the
     // rewritten plan's partitions in place and the returned frame reads
     // those blocks — no row ever transits the driver, unlike a
     // collect()+createDataFrame forcing, which would pull every matched
@@ -293,7 +293,7 @@ object Relational {
       (s, d) => {
         val naive = rangeJoinNaive(s, d)
         graft.plans.RewriteRangeJoin.withRule(s) {
-          naive.localCheckpoint(eager = true)
+          graft.Materialize.frame(naive)
         }
       },
       Some(rangeJoinOracle)),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables => T}
+import graft.{Materialize, QueryDef, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -204,21 +204,19 @@ object Similarity {
     // the corpus-wide shingle-df aggregation, the most expensive pass
     // of the signing stage, runs exactly once whichever representation
     // wins (one compact row per DISTINCT hot shingle of bounded state,
-    // the pair queries' checkpoint trade). Materializing via
-    // localCheckpoint + count surfaces the EXACT distinct-hot count
-    // from the job the checkpoint was paying anyway (round 15 —
-    // previously the Bloom path spent a separate count+fingerprint
-    // aggregate AND a separate bloomFilter pass on top of the probe
-    // collect: four actions; now two — count, then one combined
-    // Bloom+fingerprint treeAggregate sized by the exact n).
-    val mat = arrays.select(explode(col("shingles")).as("shingle"))
-      .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf)
-      .select(col("shingle"))
-      .as(org.apache.spark.sql.Encoders.STRING)
-      .rdd
-    mat.localCheckpoint()
-    val n = mat.count() // materializes the checkpoint AND yields n
+    // the pair queries' checkpoint trade). Materialize.counted surfaces
+    // the EXACT distinct-hot count from the job the checkpoint was
+    // paying anyway (round 15 — previously the Bloom path spent a
+    // separate count+fingerprint aggregate AND a separate bloomFilter
+    // pass on top of the probe collect: four actions; now two — count,
+    // then one combined Bloom+fingerprint treeAggregate sized by the
+    // exact n).
+    val (hot, n) = Materialize.counted(
+      arrays.select(explode(col("shingles")).as("shingle"))
+        .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxDf)
+        .select(col("shingle")))
+    val mat = hot.as(org.apache.spark.sql.Encoders.STRING).rdd
     if (n <= exactMax)
       graft.functions.HotShingles.exact(spark, mat.collect().view.map(
         org.apache.spark.unsafe.types.UTF8String.fromString).toSeq)
@@ -439,13 +437,13 @@ object Similarity {
   def minhashPairsOf(docs: DataFrame, threshold: Double,
       exactMax: Int = HotSetMaxEntries,
       cacheKey: Option[String] = None): DataFrame = {
-    // lazy localCheckpoint: BOTH sides of the band self-join read one
+    // lazy materialization: BOTH sides of the band self-join read one
     // materialization of the compact (doc_id, 32-long sig) frame
     // instead of re-running the scan → kernel → df-agg → sign lineage
     // per side (the df-capped signing made that lineage 2 scans deep;
     // uncheckpointed, the self-join would pay it 4×). ~260 bytes/doc —
     // the same bounded-state trade the graph loops make.
-    val sigs = cappedSignaturesOf(docs, exactMax, cacheKey).localCheckpoint(false)
+    val sigs = Materialize.frame(cappedSignaturesOf(docs, exactMax, cacheKey), eager = false)
     val bands = capBuckets(bandedFromSigs(sigs), Seq("band", "band_hash"))
     estPairsFromBands(bands, bands)
       .filter(col("est_jaccard") >= threshold)
@@ -522,7 +520,8 @@ object Similarity {
       exactMax: Int = HotSetMaxEntries,
       cacheKey: Option[String] = None): DataFrame = {
     // one materialization for both join sides — see minhashPairsOf
-    val sigs = cappedCharSignaturesOf(docs, k, exactMax, cacheKey).localCheckpoint(false)
+    val sigs = Materialize.frame(
+      cappedCharSignaturesOf(docs, k, exactMax, cacheKey), eager = false)
     val bands = capBuckets(bandedFromSigs(sigs), Seq("band", "band_hash"))
     estPairsFromBands(bands, bands)
       .filter(col("est_jaccard") >= threshold)
@@ -1208,7 +1207,7 @@ object Similarity {
     // dedup pipeline's final step (ComponentsSpec verifies against a
     // driver-side union-find).
     QueryDef("q_dedup_clusters", (s, d) =>
-      graft.ml.Components.dedupClusters(minhashPairs(s, d, 0.5), "doc_a", "doc_b"), None),
+      graft.ml.StarComponents.dedupClusters(minhashPairs(s, d, 0.5), "doc_a", "doc_b"), None),
     // Streaming form of q_dedup_near: fixture docs streamed through the
     // foreachBatch signature accumulator; emitted pair set ≡ the batch
     // path on the same rows (StreamingParitySpec). Engine-hash-specific

@@ -94,9 +94,8 @@ object TextOps {
     // the standard materialized-boundary one: kept-shingle rows ≈ the
     // corpus's token stream in block storage vs four full
     // kernel+sort passes over it — measured 1.9 s → 1.1 s (token
-    // 3-grams) and 4.1 s → ~1.8 s (char 8-grams) at sf0.1; a cluster
-    // deployment sets graft.Materialize.StorageLevelConf (or swaps the
-    // boundary for a cached table / reliable checkpoint).
+    // 3-grams) and 4.1 s → ~1.8 s (char 8-grams) at sf0.1; where the
+    // rows live is graft.Materialize's storage-level policy.
     val shingles = graft.Materialize.frame(all
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
       .filter(col("df") <= maxDf).drop("df"))
@@ -155,7 +154,7 @@ object TextOps {
     // pair-count rows (compact), and an uncheckpointed st re-ran the
     // whole candidate self-join once per direction (round 15 — the
     // before plan's two identical join towers)
-    val st = pairStatsOf(docs, maxDf).localCheckpoint(true)
+    val st = graft.Materialize.frame(pairStatsOf(docs, maxDf))
     val aInB = st.select(col("doc_a").as("doc_in"), col("doc_b").as("doc_of"),
       round(col("n_common").cast("double") / col("n_a"), 4).as("containment"))
     val bInA = st.select(col("doc_b").as("doc_in"), col("doc_a").as("doc_of"),

@@ -49,6 +49,34 @@ final case class HttpIngestConfig(
     sleeper: Long => Unit = Thread.sleep,
     clock: () => Long = System.nanoTime)
 
+object HttpIngest {
+
+  /** R4, the one retry loop of `graft.sources` (this client and the
+    * executor-side [[v2.AlertHttp]] page readers both send through it):
+    * exponential backoff on 429 ONLY (the reference's contract), other
+    * statuses return at once for the caller to judge; returns the final
+    * response, whatever its status. `throttle` runs before every
+    * attempt — a retry is a request too — and is the caller's own R5
+    * gate.
+    */
+  private[sources] def sendWithBackoff(client: HttpClient, req: HttpRequest,
+      maxRetries: Int, backoffBaseMs: Long, sleeper: Long => Unit)(
+      throttle: => Unit): HttpResponse[String] = {
+    var attempt = 0
+    var resp: HttpResponse[String] = null
+    while (attempt < maxRetries) {
+      throttle
+      resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+      if (resp.statusCode() != 429) return resp
+      attempt += 1
+      // no sleep after the FINAL attempt — the schedule's longest wait
+      // would precede an unconditional give-up, pure wasted wall-clock
+      if (attempt < maxRetries) sleeper(backoffBaseMs * (1L << (attempt - 1)))
+    }
+    resp
+  }
+}
+
 class HttpIngest(cfg: HttpIngestConfig) {
 
   private val client = HttpClient.newHttpClient()
@@ -66,23 +94,9 @@ class HttpIngest(cfg: HttpIngestConfig) {
     lastRequestNanos = cfg.clock()
   }
 
-  /** R4: send with exponential backoff on 429 ONLY (the reference's
-    * contract); returns the final response, whatever its status.
-    */
-  private def withBackoff(req: HttpRequest): HttpResponse[String] = {
-    var attempt = 0
-    var resp: HttpResponse[String] = null
-    while (attempt < cfg.maxRetries) {
-      throttle()
-      resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 429) return resp
-      attempt += 1
-      // no sleep after the FINAL attempt — the schedule's longest wait
-      // would precede an unconditional give-up, pure wasted wall-clock
-      if (attempt < cfg.maxRetries) cfg.sleeper(cfg.backoffBaseMs * (1L << (attempt - 1)))
-    }
-    resp
-  }
+  private def withBackoff(req: HttpRequest): HttpResponse[String] =
+    HttpIngest.sendWithBackoff(client, req, cfg.maxRetries, cfg.backoffBaseMs,
+      cfg.sleeper)(throttle())
 
   private def post(path: String, body: String, headers: Seq[(String, String)])
       : HttpResponse[String] = {

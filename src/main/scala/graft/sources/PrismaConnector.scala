@@ -180,15 +180,11 @@ object PrismaConnector {
     * through Spark's commit protocol (atomic publish; replaces R24's
     * delete-based rollback).
     */
-  def writeReport(df: DataFrame, path: String): Unit = {
-    val out = if (df.columns.contains("transaction_date")) df
-      else df.withColumn("transaction_date",
-        date_format(current_date(), "yyyy-MM-dd"))
-    out.write.mode("overwrite")
+  def writeReport(df: DataFrame, path: String): Unit =
+    withReportDate(df).write.mode("overwrite")
       .partitionBy("transaction_date")
       .option("header", "true").option("quoteAll", "true")
       .csv(path)
-  }
 
   /** [[writeReport]] in the reference's EXACT csv dialect —
     * QUOTE_NONNUMERIC (`aler_report/lambda.py:318`: pandas `to_csv(...,

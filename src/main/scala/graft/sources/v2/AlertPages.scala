@@ -120,9 +120,9 @@ case class LiveHttp(base: String, token: String, maxRetries: Int = 4,
 
 /** Executor-side HTTP plumbing shared by every live page reader in the
   * JVM: ONE HttpClient (connection reuse across partitions instead of a
-  * socket per page), a 429-only exponential-backoff send (R4 semantics,
-  * mirrored from HttpIngest.withBackoff), and a JVM-wide inter-request
-  * throttle gate (R5). The sleeper is injectable so specs assert the
+  * socket per page), the 429-only exponential-backoff send (R4, the
+  * same loop HttpIngest uses), and a JVM-wide inter-request throttle
+  * gate (R5). The sleeper is injectable so specs assert the
   * exact schedule wall-clock-free (local mode: executor == driver JVM);
   * clusters use the default.
   */
@@ -152,25 +152,13 @@ object AlertHttp {
     if (waitMs > 0) sleeper(waitMs)
   }
 
-  /** Send with the R4 contract: ONLY 429 retries (other statuses return
-    * immediately for the caller to judge), sleeping
-    * backoffBase·2^attempt between attempts, no sleep after the final
-    * one. Each attempt re-passes the throttle gate — a retry is a
-    * request too.
+  /** [[graft.sources.HttpIngest.sendWithBackoff]] behind this JVM's
+    * shared client and throttle gate.
     */
   def sendWithBackoff(req: java.net.http.HttpRequest, cfg: LiveHttp)
-      : java.net.http.HttpResponse[String] = {
-    var attempt = 0
-    var resp: java.net.http.HttpResponse[String] = null
-    while (attempt < cfg.maxRetries) {
-      throttle(cfg.base, cfg.minGapMs)
-      resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 429) return resp
-      attempt += 1
-      if (attempt < cfg.maxRetries) sleeper(cfg.backoffBaseMs * (1L << (attempt - 1)))
-    }
-    resp
-  }
+      : java.net.http.HttpResponse[String] =
+    graft.sources.HttpIngest.sendWithBackoff(client, req, cfg.maxRetries,
+      cfg.backoffBaseMs, ms => sleeper(ms))(throttle(cfg.base, cfg.minGapMs))
 }
 
 object AlertPages {

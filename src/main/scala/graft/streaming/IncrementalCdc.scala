@@ -41,11 +41,10 @@ object IncrementalCdc {
     * this batch's partition.
     */
   def commitBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit = {
-    val rows = batch
-      .select(RowSchema.fieldNames.map(col).toSeq: _*)
-      // cut the streaming-source lineage before the write (the
-      // StreamingDedup convention)
-      .localCheckpoint(true)
+    // cut the streaming-source lineage before the write (the
+    // StreamingDedup convention)
+    val rows = graft.Materialize.frame(
+      batch.select(RowSchema.fieldNames.map(col).toSeq: _*))
     StreamingDedup.writeBatchPartition(rows, batchId, storeDir)
   }
 

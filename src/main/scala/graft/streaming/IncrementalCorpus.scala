@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.queries.{Corpus, CorpusPipeline}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -198,13 +199,12 @@ object IncrementalCorpus {
     }
     // one materialization of the arriving docs: feeds the bench split,
     // the quality gate, and (via commitBatch) signature generation
-    val b = batch.localCheckpoint(true)
+    val b = Materialize.frame(batch)
     val benchDelta = b.filter(col("doc_id") % 10 === 0 &&
         col("doc_id") < benchMaxId)
       .select(col("doc_id"), col("text"))
-    val q = CorpusPipeline.qualityFilter(b)
-      .withColumn("digest", sha2(lower(trim(col("text"))), 256))
-      .localCheckpoint(true)
+    val q = Materialize.frame(CorpusPipeline.qualityFilter(b)
+      .withColumn("digest", sha2(lower(trim(col("text"))), 256)))
 
     // near-dup candidate pairs + band store, batch-keyed (train-once
     // signatures; the band join prunes to buckets the batch touches)
@@ -233,8 +233,7 @@ object IncrementalCorpus {
     // materialized ONCE: the batch's (digest → min doc_id) rows feed
     // the pruned read's probe, the hub lookup join, and the delta —
     // bounded by the batch's own distinct-digest count
-    val bmin = q.groupBy("digest").agg(min(col("doc_id")).as("bmin"))
-      .localCheckpoint(true)
+    val bmin = Materialize.frame(q.groupBy("digest").agg(min(col("doc_id")).as("bmin")))
     // hubs delta = digests this batch INTRODUCES, hubbed at their
     // batch minimum — replay-idempotent like every other per-batch
     // write. batchHubs (the restricted earlier-hub rows the pruned
@@ -249,7 +248,7 @@ object IncrementalCorpus {
             .withColumn("hub", col("bmin")),
             bmin.select(col("digest"), col("bmin").as("hub")))
         case Some(restricted) =>
-          val batchHubs = restricted.localCheckpoint(true)
+          val batchHubs = Materialize.frame(restricted)
           (q.select(col("doc_id"), col("digest"))
             .join(bmin, "digest")
             .join(broadcast(batchHubs), Seq("digest"), "left")

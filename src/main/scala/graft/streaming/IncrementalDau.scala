@@ -44,11 +44,10 @@ object IncrementalDau {
     * pairs become this batch's partition.
     */
   def commitBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit = {
-    val rows = batch
+    val rows = graft.Materialize.frame(batch
       .select(col("user_id"),
         datediff(to_date(col("ts")), to_date(lit("1970-01-01"))).as("day_abs"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     StreamingDedup.writeBatchPartition(rows, batchId, storeDir)
   }
 

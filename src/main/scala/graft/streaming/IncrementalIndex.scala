@@ -44,10 +44,9 @@ object IncrementalIndex {
     * rewrites only its own partition with identical recomputed rows.
     */
   def commitBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit = {
-    val pairs = TextOps.docTermsOf(batch)
-      // cut the streaming-source lineage before the batch write (the
-      // StreamingDedup convention)
-      .localCheckpoint(true)
+    // cut the streaming-source lineage before the batch write (the
+    // StreamingDedup convention)
+    val pairs = graft.Materialize.frame(TextOps.docTermsOf(batch))
     StreamingDedup.writeBatchPartition(pairs, batchId, storeDir)
   }
 

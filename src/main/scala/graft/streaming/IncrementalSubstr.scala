@@ -46,11 +46,10 @@ object IncrementalSubstr {
     * own partition with identical recomputed rows.
     */
   def commitBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit = {
-    val grams = TextOps.gramsOf(batch, K)
-      // cut the streaming-source lineage before the batch write (the
-      // StreamingDedup convention — a foreachBatch frame cannot be
-      // re-scanned by the parquet writer's retry path otherwise)
-      .localCheckpoint(true)
+    // cut the streaming-source lineage before the batch write (the
+    // StreamingDedup convention — a foreachBatch frame cannot be
+    // re-scanned by the parquet writer's retry path otherwise)
+    val grams = graft.Materialize.frame(TextOps.gramsOf(batch, K))
     StreamingDedup.writeBatchPartition(grams, batchId, storeDir)
   }
 

@@ -30,7 +30,7 @@ object StreamFixture {
     try {
       input.repartition(nFiles).write.parquet(s"$tmp/in")
       val schema = spark.read.parquet(s"$tmp/in").schema
-      drain(StreamingDedup.docsStream(spark, s"$tmp/in", schema), s"$tmp/ck") {
+      drain(StreamOps.parquetStream(spark, s"$tmp/in", schema), s"$tmp/ck") {
         (batch, batchId) => commit(batch, batchId, state)
       }.stop()
       graft.Materialize.frame(snapshot(state))

@@ -23,8 +23,10 @@ final case class StatsState(n: Long, sum: Double, max: Double)
   */
 object StreamOps {
 
-  /** File-source stream of events-shaped parquet under `dir`. */
-  def eventsStream(spark: SparkSession, dir: String, schema: StructType,
+  /** File-source stream of the parquet files under `dir`, at most
+    * `maxFilesPerTrigger` files per micro-batch.
+    */
+  def parquetStream(spark: SparkSession, dir: String, schema: StructType,
       maxFilesPerTrigger: Int = 1): DataFrame =
     spark.readStream
       .schema(schema)

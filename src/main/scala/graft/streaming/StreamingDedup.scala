@@ -97,14 +97,6 @@ object StreamingDedup {
     StructField("sig", ArrayType(LongType)),
     StructField("band", IntegerType), StructField("band_hash", LongType)))
 
-  /** File-source stream of documents-shaped parquet under `dir`. */
-  def docsStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
-
   /** Bucket count of the compacted tier. 256 bounds its file count
     * (one-ish large file per bucket per compaction) while a small
     * micro-batch's band hashes touch only the buckets they land in;
@@ -277,7 +269,7 @@ object StreamingDedup {
     // band rows feed the touched-hash collect, the pair join, AND the
     // store write — cut the streaming-source lineage and materialize
     // ONCE (signatures are the batch's expensive map-only work)
-    val bands = Similarity.bandedSignaturesOf(batch).localCheckpoint(true)
+    val bands = graft.Materialize.frame(Similarity.bandedSignaturesOf(batch))
     val store =
       if (prune) bandStore.readPruned(spark, batchId, bands)
       else bandStore.readAll(spark, batchId)
@@ -304,7 +296,7 @@ object StreamingDedup {
       storeDir: String, pairsDir: String, checkpoint: String,
       threshold: Double = 0.5, maxFilesPerTrigger: Int = 1,
       compactEvery: Int = DefaultCompactEvery): StreamingQuery =
-    StreamFixture.drain(docsStream(spark, docsDir, schema, maxFilesPerTrigger),
+    StreamFixture.drain(StreamOps.parquetStream(spark, docsDir, schema, maxFilesPerTrigger),
       checkpoint) { (batch, batchId) =>
       commitBatch(batch, batchId, storeDir, pairsDir, threshold,
         compactEvery = compactEvery)

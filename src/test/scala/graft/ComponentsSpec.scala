@@ -1,6 +1,6 @@
 package graft
 
-import graft.ml.Components
+import graft.ml.{Components, StarComponents}
 import graft.queries.Similarity
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +33,7 @@ class ComponentsSpec extends AnyFunSuite with SharedSpark {
     val labels = Components.connectedComponents(
       Seq.empty[(Long, Long)].toDF("src", "dst"))
     assert(labels.isEmpty)
-    val clusters = Components.dedupClusters(
+    val clusters = StarComponents.dedupClusters(
       Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b")
     assert(clusters.isEmpty)
   }
@@ -68,7 +68,7 @@ class ComponentsSpec extends AnyFunSuite with SharedSpark {
     val pairs = Similarity.minhashPairs(spark, sf, 0.5)
     val pairRows = pairs.select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq
     assume(pairRows.nonEmpty, "fixture should contain near-dup pairs")
-    val clusters = graft.ml.Components.dedupClusters(pairs, "doc_a", "doc_b")
+    val clusters = StarComponents.dedupClusters(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toSeq
     val want = ufComponents(pairRows)
     val wantSizes = want.groupBy(_._2).map { case (c, m) => c -> m.size.toLong }

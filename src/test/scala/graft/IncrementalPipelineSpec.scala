@@ -45,7 +45,7 @@ class IncrementalPipelineSpec extends AnyFunSuite with SharedSpark {
     write(Seq((4L, ts(3), 3L, "view", 4.0, "{}"), (5L, ts(3), 1L, "click", 5.0, "{}")))
 
     val schema = spark.read.parquet(in).schema
-    val q = StreamOps.eventsStream(spark, in, schema, maxFilesPerTrigger = 1)
+    val q = StreamOps.parquetStream(spark, in, schema, maxFilesPerTrigger = 1)
       .writeStream
       .option("checkpointLocation", ck)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>

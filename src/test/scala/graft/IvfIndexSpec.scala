@@ -256,7 +256,7 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_feed")
     arriving.repartition(3).write.parquet(s"$tmp/in")
     val schema = spark.read.parquet(s"$tmp/in").schema
-    val q = graft.streaming.StreamingDedup.docsStream(spark, s"$tmp/in", schema)
+    val q = graft.streaming.StreamOps.parquetStream(spark, s"$tmp/in", schema)
       .writeStream
       .option("checkpointLocation", s"$tmp/ck")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>

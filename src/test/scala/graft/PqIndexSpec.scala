@@ -240,7 +240,7 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
     val tmp = Files.createTempDirectory("graft_pq_feed")
     arriving.repartition(3).write.parquet(s"$tmp/in")
     val schema = spark.read.parquet(s"$tmp/in").schema
-    val q = graft.streaming.StreamingDedup.docsStream(spark, s"$tmp/in", schema)
+    val q = graft.streaming.StreamOps.parquetStream(spark, s"$tmp/in", schema)
       .writeStream
       .option("checkpointLocation", s"$tmp/ck")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>

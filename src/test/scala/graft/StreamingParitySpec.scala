@@ -32,7 +32,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
 
   private def parity(name: String, agg: DataFrame => DataFrame): Unit = {
     val batch = agg(batchEvents)
-    val stream = agg(StreamOps.eventsStream(
+    val stream = agg(StreamOps.parquetStream(
       spark, eventsDir, batchEvents.schema, maxFilesPerTrigger = 10))
     val q = StreamOps.runToMemory(stream, name, "complete", s"$ckBase/$name")
     try {
@@ -68,7 +68,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
     val dim = Seq(("click", "engagement"), ("view", "engagement"),
       ("purchase", "revenue"), ("signup", "growth"), ("error", "ops"))
       .toDF("event_type", "category")
-    val stream = StreamOps.eventsStream(spark, eventsDir, batchEvents.schema,
+    val stream = StreamOps.parquetStream(spark, eventsDir, batchEvents.schema,
         maxFilesPerTrigger = 10)
       .join(broadcast(dim), Seq("event_type")) // static side broadcast per batch
       .groupBy("category").agg(count(lit(1)).as("n"))
@@ -319,7 +319,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
     import org.apache.spark.sql.streaming.Trigger
     val outDir = Files.createTempDirectory("graft_feb_out").toString
     val ck = Files.createTempDirectory("graft_feb_ck").toString
-    val stream = StreamOps.eventsStream(spark, eventsDir, batchEvents.schema,
+    val stream = StreamOps.parquetStream(spark, eventsDir, batchEvents.schema,
       maxFilesPerTrigger = 10)
     val q = stream.writeStream
       .trigger(Trigger.AvailableNow())
@@ -349,7 +349,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
         col("s_ts") <= col("p_ts") &&
         col("s_ts") >= col("p_ts") - expr("INTERVAL 24 hours"))
     }
-    val stream = agg(StreamOps.eventsStream(
+    val stream = agg(StreamOps.parquetStream(
       spark, eventsDir, batchEvents.schema, maxFilesPerTrigger = 10))
     val q = stream.writeStream.format("memory").queryName("p_ssjoin")
       .outputMode("append").option("checkpointLocation", s"$ckBase/ssjoin").start()
@@ -374,7 +374,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
 
     write(Seq((1L, ts(1), 7L, "click", 10.0, "{}"), (2L, ts(2), 7L, "view", 20.0, "{}")))
     val stream = StreamOps.userRunningStats(
-      StreamOps.eventsStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10)
+      StreamOps.parquetStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10)
         .as[Schemas.Event])
     val q = stream.toDF().writeStream.format("memory").queryName("p_state")
       .outputMode("update").option("checkpointLocation", ck).start()
@@ -431,7 +431,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
         .coalesce(1).write.mode("append").parquet(in)
     def ts(h: Int): java.sql.Timestamp =
       java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
-    def start() = StreamOps.eventsStream(spark, in, batchEvents.schema, maxFilesPerTrigger = 1)
+    def start() = StreamOps.parquetStream(spark, in, batchEvents.schema, maxFilesPerTrigger = 1)
       .select("event_id", "user_id", "value")
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ck)
@@ -462,7 +462,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
     def ts(h: Int, m: Int): java.sql.Timestamp =
       java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     def start() = TimeWindows.tumbleAgg(
-        StreamOps.eventsStream(spark, in, batchEvents.schema, maxFilesPerTrigger = 1)
+        StreamOps.parquetStream(spark, in, batchEvents.schema, maxFilesPerTrigger = 1)
           .withWatermark("ts", "1 hour"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"), col("sum_value"))
       .writeStream.format("parquet")
@@ -503,7 +503,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
 
     write(Seq((1L, ts(1), 7L, "click", 10.0, "{}"), (2L, ts(2), 7L, "view", 20.0, "{}")))
     val stream = StreamOps.userRunningStatsExpiring(
-      StreamOps.eventsStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10)
+      StreamOps.parquetStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10)
         .as[Schemas.Event])
     val q = stream.toDF().writeStream.format("memory").queryName("p_expire")
       .outputMode("update").option("checkpointLocation", ck).start()
@@ -545,7 +545,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
       (2L, ts(2), 1L, "purchase", 10.0, "{}"),
       (3L, ts(2), 2L, "purchase", 20.0, "{}")))
     val stream = StreamOps.purchaseSignupLeftJoin(
-      StreamOps.eventsStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10))
+      StreamOps.parquetStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10))
     val q = stream.writeStream.format("memory").queryName("p_louter")
       .outputMode("append").option("checkpointLocation", ck).start()
     try {
@@ -594,7 +594,7 @@ class StreamingParitySpec extends AnyFunSuite with SharedSpark with BeforeAndAft
       (1L, ts(10), 1L, "click", 1.0, "{}"),
       (2L, ts(12), 1L, "view", 2.0, "{}")))
     val stream = StreamOps.dedupWithinWatermark(
-      StreamOps.eventsStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10),
+      StreamOps.parquetStream(spark, dir, batchEvents.schema, maxFilesPerTrigger = 10),
       watermark = "1 hour")
     val q = stream.writeStream.format("memory").queryName("p_dedup")
       .outputMode("append").option("checkpointLocation", ck).start()

@@ -3,9 +3,9 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Connected components over an undirected edge list — the step that
-  * turns near-duplicate PAIRS (MinHash/SimHash/cosine candidates) into
-  * dedup CLUSTERS with one representative each.
+/** Connected components over an undirected edge list: the second,
+  * independent engine the specs compare [[StarComponents]] against
+  * (production labels through StarComponents only).
   *
   * Algorithm: min-label propagation with pointer jumping. Every node
   * starts labeled with its own id; each round a node adopts the minimum
@@ -72,15 +72,4 @@ object Components {
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     labels
   }
-
-  /** Dedup clusters from a near-dup pair list: one row per component
-    * with the representative (minimum doc id — also the component
-    * label) and the cluster size. Singleton documents never enter the
-    * pair list and are implicitly kept.
-    */
-  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    connectedComponents(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
-      .groupBy(col("comp").as("keep_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-      .orderBy(col("keep_id"))
 }
